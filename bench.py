@@ -18,25 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hiv_data_integration_spark.battery import QUERIES  # noqa: E402
-from hiv_data_integration_spark.battery_ext import EXT_QUERIES  # noqa: E402
-from hiv_data_integration_spark.battery_sql import SQL2_QUERIES  # noqa: E402
-from hiv_data_integration_spark.benchmarks import (  # noqa: E402
-    pipeline_a_ist_scaled,
-)
+from hiv_data_integration_spark.registry import BENCH_QUERIES  # noqa: E402
 from hiv_data_integration_spark.session import get_spark  # noqa: E402
-
-ALL_QUERIES = {
-    **QUERIES,
-    **EXT_QUERIES,
-    **SQL2_QUERIES,
-    # bench-only (no DuckDB oracle; pipeline goldens cover correctness in
-    # tests/test_pipelines.py): the full report pipeline at real width —
-    # 154-col IST contract × 86 compiled rules over a 107,800-row fact —
-    # measures the rule compiler's codegen behavior, the reference's hot
-    # spot (update_pnls_report/utils.py:300-315)
-    "pipeline_a_ist_scaled": pipeline_a_ist_scaled,
-}
 
 
 def load_floors(baseline_path: str | None = None) -> dict[str, float]:
@@ -89,10 +72,15 @@ DRIFT_SUSPECT_MIN_EXCEEDANCES = 10
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(app_name="hiv-engine-bench")
+    # no console progress bars: stdout carries only the one JSON line
+    # (its archived tail is parsed as JSON)
+    spark = get_spark(
+        app_name="hiv-engine-bench",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     # warmup: JVM + parquet footer caches
-    ALL_QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    BENCH_QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     # warmup: Python worker pool — the first wide pandas_udf stage otherwise
     # pays one pandas import per spawned worker (~10 s across 32 cores),
     # which is daemon startup cost, not query cost
@@ -121,34 +109,18 @@ def main() -> None:
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     # optional focus list for local profiling: comma-separated query names
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    queries = ALL_QUERIES
+    queries = BENCH_QUERIES
     if only:
         wanted = [q.strip() for q in only.split(",") if q.strip()]
-        queries = {q: ALL_QUERIES[q] for q in wanted}
+        queries = {q: BENCH_QUERIES[q] for q in wanted}
     # NB: no forced GC between queries — measured WORSE (a System.gc()
     # wakes ContextCleaner, whose async broadcast/accumulator cleanup then
     # overlaps the next timed query; full-battery A/B at sf0.1 showed the
     # md5-heavy dedup queries 1.5-2x slower with pre-query GC).
-    # Tier-boundary refresh (every N queries, NOT per-query): clear any
-    # leftover cache entries, GC both interpreters, then SLEEP so the
-    # async ContextCleaner drain finishes OUTSIDE the next timed query —
-    # the sleep is what the rejected per-query variant lacked. Off by
-    # default (0): the round-8 quiet min-of-3 full battery reads MEDIAN
-    # 0.96x floors with zero >1.5x readings WITHOUT it (BASELINE.md
-    # r8-m1), so in-battery accumulation is not the binding factor on a
-    # quiet box; the knob exists as a salvage lever for hot runs.
-    refresh_every = int(os.environ.get("SPARK_GRAFT_BENCH_REFRESH_EVERY", "0"))
     load_before = [round(x, 2) for x in os.getloadavg()]
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    for qi, (name, fn) in enumerate(queries.items()):
-        if refresh_every and qi and qi % refresh_every == 0:
-            import gc as _gc
-
-            spark.catalog.clearCache()
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(1.0)
+    for name, fn in queries.items():
         samples: list[float] = []
         for _ in range(runs):
             start = time.perf_counter()

@@ -15,7 +15,8 @@ cluster-scale execution:
 - ``pipeline``   — DAGs reproducing the reference entry points A/B/C
 - ``streaming``  — Structured Streaming counterparts for the events table
 - ``battery``/``battery_ext``/``battery_sql`` — the DuckDB-oracle-checked
-                   query battery exposed through ``__spark_entry__.py``
+                   query battery, merged once in ``registry`` and exposed
+                   through ``__spark_entry__.py``
 """
 
 __version__ = "0.1.0"

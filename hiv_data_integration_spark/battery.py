@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,6 +50,24 @@ TABLES = [
 ]
 
 
+def _read_parquet_legacy_nanos(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, also for legacy int64-nanos timestamps.
+
+    Schema inference rejects a nanos footer (``PARQUET_TYPE_ILLEGAL``:
+    "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,false))") unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is on. Only that error sets
+    the conf on ``spark`` and retries; any other failure (a missing or
+    corrupt path) raises with the session conf untouched.
+    """
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a testdata table, dispatching ``events.ts`` on its ACTUAL type.
 
@@ -58,7 +77,8 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     integer division — the same truncation DuckDB applies) and plain
     ``timestamp[us]`` (reads natively as TIMESTAMP_NTZ, no conversion
     needed). We inspect the schema Spark infers and convert ONLY when the
-    column actually reads as a long. No session conf is mutated here:
+    column actually reads as a long. No session conf is mutated here
+    beyond the nanos fallback (:func:`_read_parquet_legacy_nanos`):
     timezone determinism is the session factory's contract
     (``session.get_spark`` pins UTC), and TIMESTAMP_NTZ bucketing is
     timezone-independent anyway, so a hostile driver session cannot shift
@@ -67,15 +87,7 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
         return spark.read.parquet(path)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        # Legacy int64-nanos physical type: schema inference rejects it
-        # ("Illegal Parquet type") unless the legacy conf is on. Only this
-        # fallback branch touches session conf, and only for data that is
-        # unreadable without it.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+    df = _read_parquet_legacy_nanos(spark, path)
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # nanos -> µs -> TIMESTAMP_NTZ via interval arithmetic on the NTZ
         # epoch literal: session-timezone-INDEPENDENT, unlike
@@ -142,13 +154,9 @@ def read_events_stream(
     schemas = _STREAM_SESSION_CACHE.setdefault("schemas", {})
     raw_schema = schemas.get(probe_path)
     if raw_schema is None:
-        try:
-            raw_schema = s.read.parquet(probe_path).schema
-        except Exception:
-            # legacy int64-nanos footer: conf lands on the isolated
-            # session only
-            s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            raw_schema = s.read.parquet(probe_path).schema
+        # a legacy int64-nanos footer sets the conf on the isolated
+        # session only
+        raw_schema = _read_parquet_legacy_nanos(s, probe_path).schema
         schemas[probe_path] = raw_schema
     reader = s.readStream.format("parquet").schema(raw_schema)
     if max_files_per_trigger is not None:

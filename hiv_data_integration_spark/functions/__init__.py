@@ -32,6 +32,7 @@ __all__ = [
     "round_to_long",
     "compound_key",
     "rename_fn",
+    "quote_ident",
 ]
 
 
@@ -217,6 +218,12 @@ def rename_fn(df_columns: list[str], fn: Callable[[str], str]) -> dict[str, str]
     """Plan-time helper: build a rename map by applying ``fn`` to each name
     (reference ``.rename(lambda c: ...)``, extract_ist_data.py:101)."""
     return {c: fn(c) for c in df_columns}
+
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for Spark-SQL text (inner backticks
+    doubled), for operators that ship projections as ``selectExpr``."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def business_days_between(start: Column, end: Column) -> Column:

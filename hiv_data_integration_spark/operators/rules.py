@@ -4,8 +4,8 @@ The reference's signature operator (`filter_consistent_data_by_rules`,
 update_pnls_report/utils.py:133-211) evaluates 279 declarative formulas
 ("AS<BC", "IC>(EO+EP+EQ)", "J!=K") with a per-row Python ``eval`` — its
 slowest path. Here each formula is parsed ONCE at plan time into a native
-Column predicate, so rule evaluation runs inside whole-stage codegen with
-zero Python in the loop.
+Spark-SQL predicate, so rule evaluation runs inside whole-stage codegen
+with zero Python in the loop.
 
 Semantics reproduced exactly (see update_pnls_report/utils.py:157-207,
 292-315):
@@ -29,15 +29,17 @@ import re
 from collections.abc import Mapping
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hiv_data_integration_spark.functions import quote_ident
 
 __all__ = [
     "Rule",
     "col_letter",
     "letter_index",
     "default_letter_binding",
-    "compile_formula",
+    "compile_formula_sql",
     "formula_letters",
     "compile_rule_projection",
     "apply_rules",
@@ -95,7 +97,7 @@ def formula_letters(formula: str) -> set[str]:
 
 
 # ---------------------------------------------------------------------------
-# Formula parser → Column compiler
+# Formula parser → Spark-SQL predicate compiler
 #
 # Grammar (covers every form in the reference's 279 rules plus cheap
 # generality):   comparison := sum (('<'|'>'|'<='|'>='|'=='|'!=') sum)
@@ -128,6 +130,14 @@ def _tokenize(formula: str) -> list[tuple[str, str]]:
 
 
 class _Parser:
+    """Recursive-descent parser over the grammar above, emitting Spark-SQL
+    text: one ``F.expr``/``selectExpr`` parse per output column instead
+    of one Py4J round trip per operator of a Column tree (~5 s of driver
+    time per ``apply_rules`` call for the real IST ruleset — 86 formulas ×
+    154 columns — in Column form, ~50× less as text). The hypothesis
+    property suite compares the output against the per-row Python
+    oracle, and the battery hash-checks it against DuckDB."""
+
     def __init__(self, tokens: list[tuple[str, str]], binding: Mapping[str, str]):
         self.tokens = tokens
         self.i = 0
@@ -142,80 +152,6 @@ class _Parser:
         tok = self.tokens[self.i]
         self.i += 1
         return tok
-
-    def comparison(self) -> Column:
-        left = self.sum_()
-        tok = self._peek()
-        if tok is None or tok[0] != "op" or tok[1] not in ("<", ">", "<=", ">=", "==", "!="):
-            raise ValueError("formula is not a comparison")
-        op = self._next()[1]
-        right = self.sum_()
-        return {
-            "<": left < right,
-            ">": left > right,
-            "<=": left <= right,
-            ">=": left >= right,
-            "==": left == right,
-            "!=": left != right,
-        }[op]
-
-    def sum_(self) -> Column:
-        node = self.product()
-        while self._peek() in (("op", "+"), ("op", "-")):
-            op = self._next()[1]
-            rhs = self.product()
-            node = node + rhs if op == "+" else node - rhs
-        return node
-
-    def product(self) -> Column:
-        node = self.atom()
-        while self._peek() in (("op", "*"), ("op", "/")):
-            op = self._next()[1]
-            rhs = self.atom()
-            node = node * rhs if op == "*" else node / rhs
-        return node
-
-    def atom(self) -> Column:
-        kind, val = self._next()
-        if kind == "letter":
-            if val not in self.binding:
-                raise KeyError(f"formula letter {val} has no bound column")
-            # fillna(0) semantics from update_pnls_report/utils.py:159
-            return F.coalesce(F.col(self.binding[val]).cast("double"), F.lit(0.0))
-        if kind == "num":
-            return F.lit(float(val))
-        if (kind, val) == ("op", "("):
-            node = self.sum_()
-            closing = self._next()
-            if closing != ("op", ")"):
-                raise ValueError("unbalanced parentheses")
-            return node
-        raise ValueError(f"unexpected token {val!r}")
-
-
-def compile_formula(formula: str, binding: Mapping[str, str]) -> Column:
-    """Parse one rule formula into a boolean Column predicate."""
-    parser = _Parser(_tokenize(formula), binding)
-    pred = parser.comparison()
-    if parser._peek() is not None:
-        raise ValueError(f"trailing tokens in formula {formula!r}")
-    return pred
-
-
-class _SqlParser(_Parser):
-    """Same grammar, emitting Spark-SQL TEXT instead of Column objects.
-
-    Why: building a Column tree goes through Py4J per operator — the real
-    IST ruleset (86 formulas × 154 columns) costs ~5 s of driver time per
-    ``apply_rules`` call in Column form; one ``F.expr`` parse per output
-    column is ~50× cheaper (the same reason ``similarity._dbl_array_lit``
-    builds array literals through the SQL parser). Every emitted fragment
-    is the SQL spelling of the exact expression the Column path builds
-    (coalesce/CAST, parenthesized arithmetic, CASE WHEN, named_struct,
-    greatest), so the two paths are semantically identical — the
-    hypothesis property suite compares the output against the per-row
-    Python oracle, and the battery hash-checks it against DuckDB.
-    """
 
     def comparison(self) -> str:
         left = self.sum_()
@@ -248,12 +184,11 @@ class _SqlParser(_Parser):
         if kind == "letter":
             if val not in self.binding:
                 raise KeyError(f"formula letter {val} has no bound column")
-            quoted = self.binding[val].replace("`", "``")
             # fillna(0) semantics from update_pnls_report/utils.py:159
-            return f"coalesce(CAST(`{quoted}` AS DOUBLE), 0.0D)"
+            return f"coalesce(CAST({quote_ident(self.binding[val])} AS DOUBLE), 0.0D)"
         if kind == "num":
             # repr() is the shortest exact decimal round-trip, 'D' makes it
-            # a DOUBLE literal — bit-identical to the Column path's F.lit
+            # a DOUBLE literal
             return repr(float(val)) + "D"
         if (kind, val) == ("op", "("):
             node = self.sum_()
@@ -266,7 +201,7 @@ class _SqlParser(_Parser):
 
 def compile_formula_sql(formula: str, binding: Mapping[str, str]) -> str:
     """Parse one rule formula into a boolean Spark-SQL predicate string."""
-    parser = _SqlParser(_tokenize(formula), binding)
+    parser = _Parser(_tokenize(formula), binding)
     pred = parser.comparison()
     if parser._peek() is not None:
         raise ValueError(f"trailing tokens in formula {formula!r}")
@@ -275,10 +210,6 @@ def compile_formula_sql(formula: str, binding: Mapping[str, str]) -> str:
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
-
-
-def _q_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 # compiled-projection memo (VERDICT r5 next-round item 3): the SQL text of
@@ -324,7 +255,7 @@ def compile_rule_projection(
         pred_sql = compile_formula_sql(rule.formula, binding)
         compiled.append((rule, pred_sql, formula_letters(rule.formula), idx))
 
-    out_exprs: list[str] = [_q_ident(c) for c in columns]
+    out_exprs: list[str] = [quote_ident(c) for c in columns]
     color_cols: list[str] = []
     n_rules = len(compiled)
     for c in columns:
@@ -349,12 +280,12 @@ def compile_rule_projection(
             # (priority, earliness) gives max-priority / first-rule-on-tie.
             best = f"greatest({', '.join(candidates)})"
         cc = f"{c}{COLOR_SUFFIX}"
-        out_exprs.append(f"({best}).color AS {_q_ident(cc)}")
+        out_exprs.append(f"({best}).color AS {quote_ident(cc)}")
         color_cols.append(cc)
 
     if color_cols:
         flag = (
-            f"coalesce({', '.join(_q_ident(cc) for cc in color_cols)}) "
+            f"coalesce({', '.join(quote_ident(cc) for cc in color_cols)}) "
             f"IS NULL AS is_consistent"
         )
     else:
@@ -404,7 +335,6 @@ def split_by_consistency(
     key_cols: list[str],
     offset: int = 3,
     exclude_inconsistent: bool = True,
-    cache: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Route rows into (consistent, flagged) frames.
 
@@ -415,16 +345,12 @@ def split_by_consistency(
     The returned "consistent" frame has the original columns; the flagged
     frame keeps the per-cell color annotations for the review sink.
 
-    ``cache=True`` persists the annotated frame so the two returned
-    branches evaluate the rule expressions once, not twice; the cache lives
-    until the session ends (both children are lazy, so there is no safe
-    point to unpersist inside this function). Long-lived sessions
-    processing many large frames can pass ``cache=False`` to trade
-    recompute for executor memory.
+    The annotated frame is cached so the two returned branches evaluate
+    the rule expressions once, not twice; the cache lives until the
+    session ends (both children are lazy, so there is no safe point to
+    unpersist inside this function).
     """
-    annotated = apply_rules(df, rules, key_cols, offset)
-    if cache:
-        annotated = annotated.cache()
+    annotated = apply_rules(df, rules, key_cols, offset).cache()
     flagged = annotated.filter(~F.col("is_consistent")).drop("is_consistent")
     clean_cols = list(df.columns)
     consistent = (

@@ -95,6 +95,37 @@ def reference_pathology_spec(
     return PathologySpec(**base)
 
 
+def _extract_and_route(
+    pathologies: list[PathologySpec],
+    coc: DataFrame,
+    keys: list[str],
+    exclude_inconsistent: bool,
+) -> tuple[list[tuple[DataFrame, Mapping[str, int]]], dict[str, DataFrame]]:
+    """Per pathology: wide extract, then (when it has rules) routing into
+    the kept rows and the flagged rows. Returns ``([(wide,
+    prefix_to_indicator)], {pathology: flagged_rows})``."""
+    wides: list[tuple[DataFrame, Mapping[str, int]]] = []
+    flagged_by_pathology: dict[str, DataFrame] = {}
+    for spec in pathologies:
+        wide = pathology_extract(
+            spec.analytics,
+            coc,
+            spec.de_map,
+            spec.contract_value_cols,
+            compound_coc_keys=spec.compound_coc_keys,
+            pivot_agg_fn=spec.pivot_agg_fn,
+        )
+        if spec.rules:
+            wide, flagged_by_pathology[spec.name] = split_by_consistency(
+                wide,
+                spec.rules,
+                key_cols=keys,
+                exclude_inconsistent=exclude_inconsistent,
+            )
+        wides.append((wide, spec.prefix_to_indicator))
+    return wides, flagged_by_pathology
+
+
 def run_pipeline_a(
     spark: SparkSession,
     pathologies: list[PathologySpec],
@@ -108,29 +139,9 @@ def run_pipeline_a(
     golden long report. Returns ``(report, {pathology: flagged_rows})``.
     """
     keys = ["organisation_unit_id", "period"]
-    wides: list[tuple[DataFrame, Mapping[str, int]]] = []
-    flagged_by_pathology: dict[str, DataFrame] = {}
-
-    for spec in pathologies:
-        wide = pathology_extract(
-            spec.analytics,
-            coc,
-            spec.de_map,
-            spec.contract_value_cols,
-            compound_coc_keys=spec.compound_coc_keys,
-            pivot_agg_fn=spec.pivot_agg_fn,
-        )
-        if spec.rules:
-            consistent, flagged = split_by_consistency(
-                wide,
-                spec.rules,
-                key_cols=keys,
-                exclude_inconsistent=exclude_inconsistent,
-            )
-            flagged_by_pathology[spec.name] = flagged
-            wide = consistent
-        wides.append((wide, spec.prefix_to_indicator))
-
+    wides, flagged_by_pathology = _extract_and_route(
+        pathologies, coc, keys, exclude_inconsistent
+    )
     if naomi_wide is not None:
         wides.append(naomi_wide)
 
@@ -222,25 +233,10 @@ def run_pipeline_b(
     flagged_by_pathology: dict[str, DataFrame] = {}
     if pathologies:
         assert coc is not None, "pathology extracts need the coc dim"
-        for spec in pathologies:
-            wide = pathology_extract(
-                spec.analytics,
-                coc,
-                spec.de_map,
-                spec.contract_value_cols,
-                compound_coc_keys=spec.compound_coc_keys,
-                pivot_agg_fn=spec.pivot_agg_fn,
-            )
-            if spec.rules:
-                consistent, flagged = split_by_consistency(
-                    wide,
-                    spec.rules,
-                    key_cols=keys,
-                    exclude_inconsistent=not include_inconsistent_data,
-                )
-                flagged_by_pathology[spec.name] = flagged
-                wide = consistent
-            wides.append((wide, spec.prefix_to_indicator))
+        extracted, flagged_by_pathology = _extract_and_route(
+            pathologies, coc, keys, not include_inconsistent_data
+        )
+        wides += extracted
 
     long_df = stack_pathologies(wides, keys)
     report = finalize_report(long_df, org_units, report_value_columns)

@@ -15,6 +15,8 @@ Two things break the driver's correctness gate silently:
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import re
 import sys
@@ -22,9 +24,11 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as contract
+from hiv_data_integration_spark import registry
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -41,58 +45,71 @@ def test_registry_complete_and_oracled():
     assert set(o) <= set(q)
 
 
+def _history():
+    """The committed CORRECTNESS_r<N>.json files, oldest round first."""
+    found = []
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            found.append((int(m.group(1)), path))
+    rounds = []
+    for _, path in sorted(found):
+        with open(path, encoding="utf-8") as f:
+            rounds.append(json.load(f))
+    return rounds
+
+
+def _green(res):
+    return (
+        res["rows_match"] is True
+        and res["schema_match"] is True
+        and res["hash_match"] is True
+        and res["err"] is None
+    )
+
+
 def test_window_prioritizes_unverified_entries():
     names = list(contract.queries())
-    window = names[:50]
-    pending = [k for k in contract._PENDING_NEVER_VERIFIED if k in names]
-    # the pinned never-driver-verified backlog verifies FIRST, in its
-    # original registration order — oldest unverified signal first
-    assert names[: len(pending)] == pending
-    # once the backlog drops below 50 the window legitimately spills into
-    # newer/green tiers, so only assert the prefix relationship
-    assert window[: min(50, len(pending))] == pending[:50]
-    # brand-new entries (no tier row yet) come directly after the
-    # pending backlog, still ahead of every previously-green entry
-    green_tiers = [
-        contract._R2_GREEN_STALE, contract._R3_GREEN, contract._R4_GREEN,
-        contract._R5_GREEN, contract._R6_GREEN, contract._R7_GREEN,
-        contract._R8_GREEN, contract._R9_GREEN, contract._R10_GREEN,
-        contract._R11_GREEN,
-    ]
-    tiered = set(contract._PENDING_NEVER_VERIFIED).union(*map(set, green_tiers))
-    new_this_round = [k for k in names if k not in tiered]
-    n_unverified = len(pending) + len(new_this_round)
-    assert names[len(pending): n_unverified] == new_this_round
-    # no previously-green entry may displace a never-driver-verified one
-    greens = set().union(*map(set, green_tiers))
-    assert not greens & set(names[:n_unverified])
-    # steady-state re-verification policy: previously-green tiers appear
-    # oldest-signal-first (r2 before r3 before r4 …), so once the backlog
-    # drains the window automatically rotates over the stalest greens
-    # (fully-recycled tiers — e.g. _R2_GREEN_STALE after round 9 — are
-    # empty and skipped)
-    pos = {k: i for i, k in enumerate(names)}
-    nonempty = [t for t in green_tiers if any(k in pos for k in t)]
-    for older, newer in zip(nonempty, nonempty[1:]):
-        older_max = max(pos[k] for k in older if k in pos)
-        newer_min = min(pos[k] for k in newer if k in pos)
-        assert older_max < newer_min, (
-            "green tiers must stay oldest-signal-first in queries() order"
-        )
-    # a name may live in exactly ONE tier — duplicates would let an old
-    # tier's position shadow the rotation (the ordering loop dedups, so
-    # this is the only place a double-listing would surface)
-    from collections import Counter
-
-    all_tier_names = contract._PENDING_NEVER_VERIFIED + sum(green_tiers, [])
-    dupes = [k for k, c in Counter(all_tier_names).items() if c > 1]
-    assert dupes == [], f"names listed in more than one tier: {dupes}"
     # nothing is dropped or duplicated by the ordering
     assert len(names) == len(set(names))
-    merged = set(contract.QUERIES) | set(contract.EXT_QUERIES) | set(
-        contract.SQL2_QUERIES
-    )
-    assert set(names) == merged
+    assert set(names) == set(registry.QUERIES)
+    rounds = _history()
+    assert rounds, "no CORRECTNESS history next to __spark_entry__.py"
+    last = {}
+    for rnd, results in enumerate(rounds):
+        for pos, (k, res) in enumerate(results.items()):
+            if _green(res):
+                last[k] = (rnd, pos)
+    # never-green entries verify FIRST, in registration order
+    never = [k for k in registry.QUERIES if k not in last]
+    assert names[: len(never)] == never
+    # then oldest signal first: last-green rounds never decrease, and a
+    # tie keeps that round's file order
+    signal = [last[k] for k in names[len(never):]]
+    assert signal == sorted(signal)
+    # the window moves on: when enough other entries exist, it never
+    # re-verifies what the latest round just verified
+    latest = {k for k, res in rounds[-1].items() if _green(res)}
+    if len(set(names) - latest) >= 50:
+        assert not latest & set(names[:50])
+
+
+def test_window_order_on_synthetic_history():
+    g = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    red = {**g, "hash_match": False}
+    errored = {**g, "err": "boom"}
+    rounds = [
+        {"a": g, "b": g, "gone": g},
+        {"c": g, "d": g, "b": g},
+        {"a": red, "e": errored, "gone": g},
+    ]
+    names = ["d", "new", "a", "b", "c", "e"]
+    # new: never seen; e: only errored → never green (registration order);
+    # a: red in the latest round, sorts by its round-1 green; c, d, b tie
+    # on round 2 and keep that file's order; gone: not registered, ignored
+    assert registry.window_order(names, rounds) == ["new", "e", "a", "c", "d", "b"]
+    assert registry.window_order([], rounds) == []
+    assert registry.window_order(names, []) == names
 
 
 @pytest.fixture(scope="module")

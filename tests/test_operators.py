@@ -1026,14 +1026,19 @@ def test_pack_token_budget_boundaries(spark):
 
 def test_tbl_dispatches_both_events_ts_physical_types(spark, tmp_path):
     """The testdata generator has shipped events.ts as int64-nanos (r1) and
-    timestamp[us] (r2+). tbl() must read BOTH: native pass-through for µs,
-    nanosAsLong + div-1000 truncation for legacy nanos."""
+    timestamp[us] (r2+). tbl() and read_events_stream() must read BOTH:
+    native pass-through for µs, nanosAsLong + div-1000 truncation for
+    legacy nanos. Only the nanos footer error may set that conf: a
+    missing path raises and leaves the session untouched."""
     import datetime
+    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
 
-    from hiv_data_integration_spark.battery import tbl
+    from hiv_data_integration_spark import battery
+    from hiv_data_integration_spark.battery import read_events_stream, tbl
 
     ts = [datetime.datetime(2024, 1, 1, 12, 0, 0, 123456),
           datetime.datetime(2024, 1, 2, 13, 30, 0, 654321)]
@@ -1058,6 +1063,34 @@ def test_tbl_dispatches_both_events_ts_physical_types(spark, tmp_path):
             for r in df.select("ts").collect()
         )
         assert got == ts, (unit, got)
+
+        stream = read_events_stream(
+            spark, str(d / "events*.parquet"), str(d / "events.parquet")
+        )
+        sink = f"events_ts_{unit}_{uuid.uuid4().hex[:8]}"
+        try:
+            (
+                stream.select(F.col("ts").cast("timestamp_ntz").alias("ts"))
+                .writeStream.format("memory")
+                .queryName(sink)
+                .option("checkpointLocation", str(tmp_path / f"ckpt_{unit}"))
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+            got = sorted(
+                r["ts"] for r in stream.sparkSession.table(sink).collect()
+            )
+        finally:
+            # the nanos probe set the legacy conf on the memoized isolated
+            # stream session; later tests get a fresh one
+            battery._STREAM_SESSION_CACHE.clear()
+        assert got == ts, ("stream", unit, got)
+
+    fresh = spark.newSession()
+    with pytest.raises(AnalysisException):
+        tbl(fresh, str(tmp_path / "absent"), "events")
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) is None
 
 
 def test_new_pipeline_operator_invariants(spark):

@@ -15,13 +15,7 @@ import duckdb
 import pytest
 
 from hiv_data_integration_spark.battery import TABLES
-from hiv_data_integration_spark.battery import ORACLE as _CORE_ORACLE
-from hiv_data_integration_spark.battery import QUERIES as _CORE_QUERIES
-from hiv_data_integration_spark.battery_ext import EXT_ORACLE, EXT_QUERIES
-from hiv_data_integration_spark.battery_sql import SQL2_ORACLE, SQL2_QUERIES
-
-QUERIES = {**_CORE_QUERIES, **EXT_QUERIES, **SQL2_QUERIES}
-ORACLE = {**_CORE_ORACLE, **EXT_ORACLE, **SQL2_ORACLE}
+from hiv_data_integration_spark.registry import ORACLE, QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

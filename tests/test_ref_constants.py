@@ -13,7 +13,7 @@ from hiv_data_integration_spark import ref_constants as rc
 from hiv_data_integration_spark.operators.rules import (
     COLOR_SUFFIX,
     apply_rules,
-    compile_formula,
+    compile_formula_sql,
     default_letter_binding,
     evaluate_rules_python,
     formula_letters,
@@ -47,8 +47,9 @@ def test_payload_is_immutable():
 
 @pytest.mark.parametrize("pathology", ["IST", "PEC", "PTME"])
 def test_all_shipped_formulas_compile(spark, pathology):
-    """Every real formula parses into a Column under the pathology's own
-    contract binding — letters resolve, grammar covers every operator."""
+    """Every real formula parses into a SQL predicate under the
+    pathology's own contract binding — letters resolve, grammar covers
+    every operator."""
     columns = KEYS + rc.expected_value_columns(pathology)
     binding = default_letter_binding(columns)
     max_idx = len(columns) + 2  # offset 3, 1-based
@@ -61,7 +62,7 @@ def test_all_shipped_formulas_compile(spark, pathology):
                 f"{pathology}/{name}: letter {lt} (index {idx}) outside the "
                 f"{len(columns)}-column contract binding"
             )
-        compile_formula(rule.formula, binding)  # raises on any gap
+        compile_formula_sql(rule.formula, binding)  # raises on any gap
 
 
 def _random_wide_rows(pathology: str, n_rows: int, seed: int):

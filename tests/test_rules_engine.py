@@ -13,7 +13,7 @@ from hiv_data_integration_spark.operators.rules import (
     Rule,
     apply_rules,
     col_letter,
-    compile_formula,
+    compile_formula_sql,
     default_letter_binding,
     evaluate_rules_python,
     letter_index,
@@ -51,11 +51,11 @@ def test_binding_offset_matches_reference():
 def test_formula_parse_errors(spark):
     binding = default_letter_binding(COLUMNS)
     with pytest.raises(ValueError):
-        compile_formula("E+F", binding)  # not a comparison
+        compile_formula_sql("E+F", binding)  # not a comparison
     with pytest.raises(KeyError):
-        compile_formula("ZZ<E", binding)  # unbound letter
+        compile_formula_sql("ZZ<E", binding)  # unbound letter
     with pytest.raises(ValueError):
-        compile_formula("E<(F", binding)  # unbalanced parens
+        compile_formula_sql("E<(F", binding)  # unbalanced parens
 
 
 values = st.one_of(st.none(), st.integers(min_value=-20, max_value=20))

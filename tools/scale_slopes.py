@@ -235,12 +235,9 @@ def gen() -> None:
 
 def run(entries: list[str]) -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from hiv_data_integration_spark.battery import QUERIES
-    from hiv_data_integration_spark.battery_ext import EXT_QUERIES
-    from hiv_data_integration_spark.battery_sql import SQL2_QUERIES
+    from hiv_data_integration_spark.registry import QUERIES as Q
     from hiv_data_integration_spark.session import get_spark
 
-    Q = {**QUERIES, **EXT_QUERIES, **SQL2_QUERIES}
     spark = get_spark(app_name="scale-slopes")
     out: dict[str, dict[str, float]] = {}
     for sf_dir, tag in ((SRC, "x1"), (DST, "x10")):
